@@ -335,7 +335,8 @@ def minhash_lsh_pairs_cross(
         # properties (job description/group — the bench and probe
         # labels) into the pool threads, the documented semantics for
         # driver-side concurrency (ADVICE r8); a failed side build
-        # releases both persists instead of stranding them.
+        # releases both persists instead of stranding them, and so does
+        # a failed pair-stage build.
         with ThreadPoolExecutor(max_workers=2) as pool:
             list(
                 pool.map(
@@ -343,11 +344,11 @@ def minhash_lsh_pairs_cross(
                     (nb, cb),
                 )
             )
+        out = cross_pairs_from_banded(nb, cb, min_jaccard_est)
     except Exception:
         nb.unpersist()
         cb.unpersist()
         raise
-    out = cross_pairs_from_banded(nb, cb, min_jaccard_est)
     out._cached_intermediates = [nb, cb]
     return out
 
@@ -464,7 +465,11 @@ def minhash_clusters(
             F.coalesce("__cid", "id").alias("cluster_id"),
         )
     )
-    out._cached_intermediates = getattr(pairs, "_cached_intermediates", [])
+    # the pairs' persisted relations AND the CC edge relation, so
+    # unpersist_intermediates(out) releases every persist of the call
+    out._cached_intermediates = getattr(
+        pairs, "_cached_intermediates", []
+    ) + getattr(cmap, "_cached_intermediates", [])
     return out
 
 
@@ -1142,7 +1147,10 @@ def embedding_clusters(
             F.coalesce("__cid", "id").alias("cluster_id"),
         )
     )
-    out._cached_intermediates = getattr(pairs, "_cached_intermediates", [])
+    # pairs' and CC edge relation's persists (see minhash_clusters)
+    out._cached_intermediates = getattr(
+        pairs, "_cached_intermediates", []
+    ) + getattr(cmap, "_cached_intermediates", [])
     return out
 
 

@@ -49,18 +49,16 @@ def get_spark(
         # Data-proportional stages never see this floor.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # FAIR job scheduling (guide §2.6): the engine's serving shape
-        # is many concurrent independent queries; FIFO lets a long
-        # job's wide stages head-of-line-block short queries sharing
-        # the application. Measured r09 on the full 111-op battery,
-        # 8-way concurrent, steal-quiet box, arms alternated per pass:
-        # FIFO walls [30.2, 28.1, 34.1, 32.4] vs FAIR [23.1, 27.1,
-        # 28.0, 26.1] s (-16% mean; per-op concurrent tails shrink,
-        # e.g. d4 8-10s -> 6-7s). Workload-shape, not core-count,
-        # dependent: single-job sessions are unaffected (one job is
-        # trivially fair), and on a cluster the same config governs
-        # multi-tenant drivers. Override via extra_conf if a caller
-        # wants strict FIFO.
+        # FAIR job scheduling: the engine's serving shape is many
+        # concurrent independent queries. NOTE: FAIR mode alone does not
+        # share the cluster between them. With no allocation file and no
+        # per-thread ``spark.scheduler.pool`` local property (this
+        # package sets neither), every job lands in the one ``default``
+        # pool, and that pool schedules its jobs FIFO internally — so
+        # concurrent callers are still served in submission order. To get
+        # fair sharing, a caller sets ``spark.scheduler.pool`` per thread
+        # (``sc.setLocalProperty``) and, for weights, an allocation file.
+        # ``extra_conf`` overrides the mode.
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.autoBroadcastJoinThreshold", "32m")
         .config(

@@ -23,9 +23,12 @@ compaction.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import shutil
+import threading
+from collections import OrderedDict
 from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -61,6 +64,48 @@ def dedup_statements(df: DataFrame) -> DataFrame:
     )
 
 
+#: entries the per-store View answer cache keeps (LRU beyond that)
+ANSWER_CACHE_SIZE = 1024
+
+
+class AnswerCache:
+    """Bounded LRU of ``View`` answers, shared by every View of one
+    :class:`Store` and safe across threads. Holds its own deep copies,
+    hands out deep copies, so no caller can alter another's answer.
+    Keys start with :meth:`Store.answer_token`; ``view.py`` builds them
+    and decides what may be cached."""
+
+    #: what :meth:`get` returns for an absent key (None is an answer)
+    MISS = object()
+
+    def __init__(self):
+        self.hits = 0
+        self.misses = 0
+        self._lock = threading.Lock()
+        self._entries: OrderedDict = OrderedDict()
+
+    def get(self, key):
+        with self._lock:
+            value = self._entries.get(key, self.MISS)
+            if value is self.MISS:
+                self.misses += 1
+                return value
+            self.hits += 1
+            self._entries.move_to_end(key)
+        return copy.deepcopy(value)
+
+    def put(self, key, value) -> None:
+        value = copy.deepcopy(value)
+        with self._lock:
+            self._entries[key] = value
+            self._entries.move_to_end(key)
+            while len(self._entries) > ANSWER_CACHE_SIZE:
+                self._entries.popitem(last=False)
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+
 class Store:
     """A statement store rooted at a parquet directory."""
 
@@ -71,8 +116,10 @@ class Store:
         self._marker = os.path.join(self.uri, "_compacted")
         self._epoch_file = os.path.join(self.uri, "_epoch")
         self._inventory_file = os.path.join(self.uri, "_compacted_inventory")
+        self._value_index = os.path.join(self.uri, "value_index")
         self._canonical: DataFrame | None = None
         self._bucketed: str | None = None
+        self.answers = AnswerCache()
 
     # --- compaction marker / write epoch --------------------------------------
     # After optimize() the on-disk rows are unique on STATEMENT_KEY, so
@@ -96,7 +143,9 @@ class Store:
     # on-disk rows distinct only in canonical_id (written at different
     # resolution states) share an id — a resolver remap CAN merge them
     # into equal keys, and that read must dedup (round-8 self-review
-    # finding, regression-tested).
+    # finding, regression-tested). The same contract governs the View
+    # answer cache (``answer_token``): an out-of-contract writer gets
+    # stale View answers, not just a skipped dedup.
     def _read_epoch(self) -> int:
         try:
             with open(self._epoch_file) as fh:
@@ -105,8 +154,10 @@ class Store:
             return 0
 
     def bump_epoch(self) -> int:
-        """Advance the write epoch (invalidates the compaction fast
-        path). Public so out-of-band writers can stay in contract."""
+        """Advance the write epoch. This invalidates the compaction fast
+        path and every cached ``View`` answer (see :meth:`answer_token`).
+        Public so out-of-band writers can stay in contract: one that
+        skips it gets stale View answers as well as a skipped dedup."""
         epoch = self._read_epoch() + 1
         os.makedirs(self.uri, exist_ok=True)
         tmp = self._epoch_file + ".tmp"
@@ -167,6 +218,29 @@ class Store:
         above for what out-of-contract writers must do)."""
         payload = self._marker_payload()
         return payload is not None and payload["epoch"] == self._read_epoch()
+
+    def answer_token(self) -> tuple | None:
+        """Validity token for cached ``View`` answers, or None when
+        answers must not be cached. A token exists only on a compacted
+        store (marker epoch == current epoch) with no resolver installed
+        and no bucketed snapshot served; it is the write epoch plus the
+        identity of the value-index directory, because rebuilding the
+        index (``build_value_index``) changes ``get_inverted`` answers
+        without bumping the epoch. Every in-contract write bumps the
+        epoch before its job commits, so a View read whose token is the
+        same before and after its compute saw no write."""
+        if self._canonical is not None or self._bucketed is not None:
+            return None
+        payload = self._marker_payload()
+        epoch = self._read_epoch()
+        if payload is None or payload["epoch"] != epoch:
+            return None
+        try:
+            st = os.stat(self._value_index)
+            index = (st.st_ino, st.st_mtime_ns)
+        except OSError:
+            index = None
+        return epoch, index
 
     def verify_compacted(self) -> bool:
         """Deep check for ops tooling: epoch match AND the on-disk file
@@ -302,7 +376,13 @@ class Store:
         bucketed snapshot table instead of the parquet store — same
         columns, same filters, zero-Exchange plans for every
         canonical_id-keyed consumer; see that method for the staleness
-        contract."""
+        contract.
+
+        ``View`` reads on top of this table cache their answers while
+        the store is compacted, unresolved and not serving the bucketed
+        snapshot; the write epoch invalidates them (:meth:`answer_token`),
+        so writers that bypass the store API must call
+        :meth:`bump_epoch`."""
         if self._bucketed is not None:
             # snapshot was written from statements() (already deduped);
             # treated like a compacted store: fast path unless a
@@ -426,7 +506,7 @@ class Store:
         after bulk writes or resolver changes (like the reference's
         OPTIMIZE, staleness is operational, not a correctness risk —
         readers fall back to the main table when absent)."""
-        path = os.path.join(self.uri, "value_index")
+        path = self._value_index
         tmp = path + ".build"
         (
             self.statements()
@@ -448,10 +528,9 @@ class Store:
 
     def value_index(self) -> DataFrame | None:
         """The value-clustered reverse-lookup copy, or None if not built."""
-        path = os.path.join(self.uri, "value_index")
-        if not os.path.exists(path):
+        if not os.path.exists(self._value_index):
             return None
-        return self.spark.read.schema(STATEMENT_SCHEMA).parquet(path)
+        return self.spark.read.schema(STATEMENT_SCHEMA).parquet(self._value_index)
 
     def entity_refs(self) -> DataFrame:
         """Entity-reference statements (``prop_type='entity'``), served

@@ -698,3 +698,62 @@ def test_tfidf_cosine_pairs_validation(spark):
         tfidf_cosine_pairs(df, n=0)
     with pytest.raises(ValueError, match="max_df"):
         tfidf_cosine_pairs(df, max_df=1)
+
+
+def _persistent_rdds(spark) -> set[int]:
+    """Ids of the session's persisted RDDs. Compared as sets: Spark
+    holds them weakly, so an older test's leftovers may vanish
+    mid-test and a bare count would drift."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.mark.parametrize("op", ["minhash_clusters", "embedding_clusters"])
+def test_cluster_operators_release_every_persist(spark, op):
+    """The cluster operators persist the pair stage's relations AND the
+    connected-components edge relation; unpersist_intermediates on the
+    result must release all of them."""
+    from ftm_columnstore_spark.operators import dedup
+
+    if op == "minhash_clusters":
+        text = "persist leak probe " + BASE
+        df = spark.createDataFrame(
+            [(1, text), (2, text), (3, "an unrelated persist leak probe doc")],
+            "doc_id long, text string",
+        )
+        kw = dict(num_hashes=16, num_bands=8, threshold=0.5)
+    else:
+        df = spark.createDataFrame(
+            [(1, [0.3, 0.7, 0.1]), (2, [0.31, 0.7, 0.1]), (3, [0.9, -0.2, 0.4])],
+            "vec_id long, embedding array<float>",
+        )
+        kw = dict(min_cosine=0.95)
+    before = _persistent_rdds(spark)
+    out = getattr(dedup, op)(df, **kw)
+    got = {r[0]: r[1] for r in out.collect()}
+    assert got[1] == got[2] == 1 and got[3] == 3
+    assert _persistent_rdds(spark) - before
+    dedup.unpersist_intermediates(out, blocking=True)
+    assert not _persistent_rdds(spark) - before
+
+
+def test_minhash_lsh_pairs_cross_failure_releases_band_relations(spark):
+    from ftm_columnstore_spark.operators.dedup import (
+        minhash_lsh_pairs_cross,
+        minhash_signature,
+    )
+
+    new = spark.createDataFrame(
+        [(7, "band relation leak probe, new side")], "doc_id long, text string"
+    )
+    corpus = spark.createDataFrame(
+        [(8, "band relation leak probe, corpus side")], "doc_id long, text string"
+    )
+    before = _persistent_rdds(spark)
+    with pytest.raises(TypeError):
+        minhash_lsh_pairs_cross(
+            minhash_signature(new, num_hashes=16, shingle_k=3),
+            minhash_signature(corpus, num_hashes=16, shingle_k=3),
+            num_bands=8,
+            min_jaccard_est="0.5",
+        )
+    assert not _persistent_rdds(spark) - before
