@@ -46,7 +46,14 @@ def fan_out(df):
     Estimates at or beyond the unknown-stats sentinel (relations with
     no statistics — e.g. LogicalRDD from createDataFrame — default to
     Long.MaxValue) are treated as UNKNOWN, not huge, and take the
-    exact probe; no real scan-rooted estimate gets near 2^62."""
+    exact probe; no real scan-rooted estimate gets near 2^62.
+
+    Caveat: the size gate assumes a large byte estimate means at least
+    slot-count partitions. An input that is large but coarsely split
+    — one big file in an unsplittable codec, a coalesced or cached
+    upstream relation, AQE-coalesced shuffle output — passes the gate
+    with fewer partitions than slots, so the fan-out it needed is
+    skipped and its per-row Arrow/Python work runs on few tasks."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:

@@ -16,6 +16,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ftm_columnstore_spark.store import in_datasets
+
 
 def dataset_stats(statements: DataFrame, approx: bool = False) -> DataFrame:
     """Per-(dataset, schema) distinct-entity + statement counts — the
@@ -50,12 +52,7 @@ def stats(
 ) -> dict[str, Any]:
     """``view.stats()`` report: entity count, per-schema counts, per-country
     counts (reference golden ``tests/test_store.py:129-142``)."""
-    df = statements
-    if isinstance(dataset, str):
-        df = df.filter(F.col("dataset") == dataset)
-    elif dataset is not None:
-        df = df.filter(F.col("dataset").isin(list(dataset)))
-    df = df.cache()
+    df = in_datasets(statements, dataset).cache()
     try:
         entity_count = df.select("canonical_id").distinct().count()
         schemata = {

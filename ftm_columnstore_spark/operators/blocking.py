@@ -9,9 +9,9 @@ candidate pairs carry scores/judgements in an xref table
 
 Spark shapes: fpx is a derived DataFrame written alongside statements; the
 blocking join is groupBy+HAVING+self-join; canonicalization is connected
-components by iterative min-id propagation (converges in O(log longest
-path) joins; match graphs are near-forests so this beats pulling in a graph
-library)."""
+components — driver union-find for small edge graphs, large-star/small-star
+rounds (O(log² n) joins) above that; either beats pulling in a graph
+library."""
 
 from __future__ import annotations
 
@@ -155,47 +155,42 @@ def score_pairs(pairs: DataFrame, statements: DataFrame) -> DataFrame:
     return scored.withColumn("score", F.round(score, 8))
 
 
+#: Round budget of the distributed large-star/small-star loop; enough
+#: for any graph the O(log² n) bound reaches (a million-node chain
+#: needs ~20 rounds).
+MAX_CC_ROUNDS = 50
+
+#: Edge graphs with at most this many (distinct, self-loop-free) edges
+#: are labeled by driver-side union-find instead of the distributed
+#: rounds — the bounded-collect rule: 100k edges ≈ a few MB on the
+#: driver. Tests set it to 0 to force the distributed rounds.
+SMALL_GRAPH_EDGES = 100_000
+
+
 def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 50,
-    algorithm: str = "star",
-    small_graph_threshold: int = 100_000,
-    edges_deduped: bool = False,
+    edges: DataFrame, edges_deduped: bool = False
 ) -> DataFrame:
     """D5: canonical map from accepted match edges (entity_id →
     canonical_id = min id of its component). Reference cite:
     ``store.py:25-28`` (resolver/linker), queried at
-    ``tests/test_store.py:264-269``.
+    ``tests/test_store.py:264-269``. Nodes that appear only in
+    self-loops are not labeled.
 
-    ``algorithm="star"`` (default): alternating large-star/small-star
-    (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond")
-    — converges in O(log² n) rounds regardless of component diameter, so
-    an adversarial million-node chain finishes in ~20 rounds instead of a
-    million. Each round is two groupBy-min + join passes; no per-node
-    neighbour arrays are ever materialized, so a 100M-member component's
-    hub never lands in one task.
+    The input size picks the path. Up to :data:`SMALL_GRAPH_EDGES`
+    distinct edges, the edges are collected and labeled with
+    driver-side union-find — one bounded collect replaces 5-15 shuffle
+    rounds. This is the COMMON case for near-dup pair graphs over
+    mostly-unique corpora (measured: the d16/v15/t23 entries each spent
+    ~4-5s in star rounds over a few-hundred-edge graph).
 
-    ``algorithm="label"``: minimum-label propagation — one groupBy-min +
-    join per round, O(component diameter) rounds. Wins on the shallow
-    near-forest graphs entity matching actually produces (diameter ≤ 3-4:
-    fewer, cheaper rounds), loses badly on long chains.
-
-    Small-graph fast path (``algorithm="star"``, the default): when the
-    (distinct, self-loop-free) edge set holds at most
-    ``small_graph_threshold`` rows, the edges are collected and labeled
-    with driver-side union-find — one bounded collect (the house rule:
-    the threshold is the bound, default 100k edges ≈ a few MB) replaces
-    5-15 shuffle rounds. This is the COMMON case for near-dup pair
-    graphs over mostly-unique corpora (measured: the d16/v15/t23
-    entries each spent ~4-5s in star rounds over a few-hundred-edge
-    graph). The iterative path is untouched for anything larger;
-    labels are identical (component minimum) either way, pinned by a
-    both-paths test. Pass ``small_graph_threshold=0`` to force the
-    distributed rounds. The label path skips the probe entirely — it
-    deliberately keeps its historical output for self-loop-only nodes
-    (present under "label", absent under "star"/fast), and building
-    the deduped relation just to probe would cost large label-mode
-    graphs a full wasted distinct+checkpoint job.
+    Larger graphs run alternating large-star/small-star (Kiveris et al.
+    2014, "Connected Components in MapReduce and Beyond"), which
+    converges in O(log² n) rounds regardless of component diameter, so
+    an adversarial million-node chain finishes in ~20 rounds instead of
+    a million. Each round is two groupBy-min + join passes; no per-node
+    neighbour arrays are ever materialized, so a 100M-member
+    component's hub never lands in one task. Labels are identical
+    (component minimum) on both paths, pinned by a both-paths test.
 
     ``edges_deduped=True`` asserts the input is already self-loop-free
     and distinct (e.g. LSH pair relations, whose ``left_id < right_id``
@@ -204,73 +199,28 @@ def connected_components(
     §2.4). Labels are unchanged for inputs that honour the assertion
     (union-find and the star rounds are duplicate-idempotent; only the
     small-graph row-count guard would see duplicates)."""
-    if algorithm == "star":
-        deduped = edges.select(
-            F.col("left_id").alias("src"), F.col("right_id").alias("dst")
-        )
-        if not edges_deduped:
-            deduped = deduped.filter(F.col("src") != F.col("dst")).distinct()
-        # persist + ONE count materializes the relation AND decides the
-        # small-graph path — r08 spent two sequential driver jobs here
-        # (eager localCheckpoint, then a count over it); folding them
-        # saves a job per call (VERDICT r8 item 3, guide §2.6/§5).
-        # persist (vs localCheckpoint) also lets repeat invocations in
-        # one session hit the plan cache (the minhash_lsh_pairs lesson).
-        deduped = deduped.persist()
-        n_edges = deduped.count()
-        if 0 < small_graph_threshold >= n_edges:
-            # rows cross to the driver only once the graph is known
-            # small; the collect reads the just-populated cache.
-            out = _cc_union_find(
-                edges.sparkSession, deduped.collect(), deduped.schema
-            )
-            out._cached_intermediates = [deduped]
-            return out
-        out = _cc_star(deduped, max_iterations, pre_deduped=True)
-        out._cached_intermediates = getattr(
-            out, "_cached_intermediates", []
-        ) + [deduped]
-        return out
-    labels = (
-        edges.select(F.col("left_id").alias("id"))
-        .union(edges.select("right_id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
-    sym = edges.select(
+    deduped = edges.select(
         F.col("left_id").alias("src"), F.col("right_id").alias("dst")
-    ).union(
-        edges.select(F.col("right_id"), F.col("left_id"))
     )
-    for _ in range(max_iterations):
-        neighbour_min = (
-            sym.join(labels, sym.src == labels.id)
-            .groupBy("dst")
-            .agg(F.min("label").alias("nlabel"))
+    if not edges_deduped:
+        deduped = deduped.filter(F.col("src") != F.col("dst")).distinct()
+    # persist + ONE count materializes the relation AND decides the
+    # small-graph path — r08 spent two sequential driver jobs here
+    # (eager localCheckpoint, then a count over it); folding them
+    # saves a job per call (VERDICT r8 item 3, guide §2.6/§5).
+    # persist (vs localCheckpoint) also lets repeat invocations in
+    # one session hit the plan cache (the minhash_lsh_pairs lesson).
+    deduped = deduped.persist()
+    if deduped.count() <= SMALL_GRAPH_EDGES:
+        # rows cross to the driver only once the graph is known
+        # small; the collect reads the just-populated cache.
+        out = _cc_union_find(
+            edges.sparkSession, deduped.collect(), deduped.schema
         )
-        new_labels = (
-            labels.join(neighbour_min, labels.id == neighbour_min.dst, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce("nlabel", F.col("label"))
-                ).alias("label"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select(
-        F.col("id").alias("entity_id"), F.col("label").alias("canonical_id")
-    )
+    else:
+        out = _cc_star(deduped)
+    out._cached_intermediates = [deduped]
+    return out
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -342,21 +292,12 @@ def _cc_union_find(spark, edge_rows, schema) -> DataFrame:
     return spark.createDataFrame(data, out_schema)
 
 
-def _cc_star(
-    edges: DataFrame, max_iterations: int, pre_deduped: bool = False
-) -> DataFrame:
-    if pre_deduped:
-        cur = edges
-    else:
-        cur = (
-            edges.select(
-                F.col("left_id").alias("src"), F.col("right_id").alias("dst")
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    for _ in range(max_iterations):
+def _cc_star(edges: DataFrame) -> DataFrame:
+    """Distributed large-star/small-star rounds over a distinct,
+    self-loop-free (src, dst) edge relation, until a round changes
+    nothing or :data:`MAX_CC_ROUNDS` run out."""
+    cur = edges
+    for _ in range(MAX_CC_ROUNDS):
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         changed = (
             nxt.exceptAll(cur).union(cur.exceptAll(nxt)).limit(1).count()

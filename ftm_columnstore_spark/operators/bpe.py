@@ -49,6 +49,11 @@ MERGE_SCHEMA = T.StructType(
     ]
 )
 
+#: Distinct-word vocabularies up to this size train on the driver in
+#: one collect (the bounded-collect rule); larger ones run the
+#: distributed rounds. Tests set it to 0 to force the distributed rounds.
+SMALL_VOCAB_WORDS = 65_536
+
 
 def _word_counts(df: DataFrame, text_col: str) -> DataFrame:
     """(w, cnt): brace-encoded distinct words with occurrence counts —
@@ -129,7 +134,6 @@ def learn_bpe(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 16,
-    small_vocab_threshold: int = 65_536,
     vocab_cap: int | None = None,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges over the corpus. Output:
@@ -146,13 +150,12 @@ def learn_bpe(
     exactly once (the initial word count).
 
     Small-vocab fast path: when the distinct-word relation holds at
-    most ``small_vocab_threshold`` rows (the explicit collect bound —
+    most :data:`SMALL_VOCAB_WORDS` rows (the explicit collect bound —
     the house bounded-collect rule, same shape as the connected-
     components fast path), the word counts are collected ONCE and all
     rounds run driver-side: 2·n_merges scheduler round-trips collapse
-    into a single job. The distributed rounds are untouched above the
-    threshold and forced by ``small_vocab_threshold=0``; the
-    property-parity test pins both paths equal on arbitrary corpora.
+    into a single job. The distributed rounds are untouched above that
+    size; a test pins both paths equal.
 
     ``vocab_cap``: truncate the training relation to the top-``cap``
     distinct words by (count DESC, word ASC — total order). Standard
@@ -173,21 +176,16 @@ def learn_bpe(
             raise ValueError("vocab_cap must be positive (or None)")
         wc = wc.orderBy(F.col("cnt").desc(), "w").limit(int(vocab_cap))
     vocab = wc.localCheckpoint(eager=True)
-    if small_vocab_threshold > 0:
-        head = (
-            vocab.select(
-                F.regexp_replace("w", r"[{}]", "").alias("term"), "cnt"
-            )
-            .limit(small_vocab_threshold + 1)
-            .collect()
+    head = (
+        vocab.select(F.regexp_replace("w", r"[{}]", "").alias("term"), "cnt")
+        .limit(SMALL_VOCAB_WORDS + 1)
+        .collect()
+    )
+    if len(head) <= SMALL_VOCAB_WORDS:
+        return spark.createDataFrame(
+            _learn_bpe_driver([(r["term"], r["cnt"]) for r in head], n_merges),
+            MERGE_SCHEMA,
         )
-        if len(head) <= small_vocab_threshold:
-            return spark.createDataFrame(
-                _learn_bpe_driver(
-                    [(r["term"], r["cnt"]) for r in head], n_merges
-                ),
-                MERGE_SCHEMA,
-            )
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(int(n_merges)):
         best = (

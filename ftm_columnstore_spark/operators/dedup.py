@@ -115,7 +115,6 @@ def minhash_signature(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     shingle_k: int = 5,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """(id, signature array<bigint>) — min over per-permutation hashes of the
     shingle set.
@@ -128,52 +127,37 @@ def minhash_signature(
     grouped form is one codegen'd partial+final aggregation whose only
     shuffle key is the doc id.
 
-    ``hash_family="portable"`` (default) uses the md5-based engine-portable
-    permutation family above, so results are reproducible outside Spark
-    (DuckDB oracle, offline audits). ``"fast"`` uses xxhash64 mixing —
-    same candidate-pair geometry, marginally cheaper per shingle."""
+    The permutations are the md5-based engine-portable family above,
+    so results are reproducible outside Spark (DuckDB oracle, offline
+    audits)."""
     from ftm_columnstore_spark.functions.text import shingle_rows
 
-    if hash_family not in ("portable", "fast"):
-        raise ValueError(
-            f"hash_family must be 'portable' or 'fast', got {hash_family!r}"
-        )
     shingled = shingle_rows(df, text_col, id_col, shingle_k)
     # per-permutation hashes are PROJECTED before the aggregation and
     # min() runs over plain columns: agg-input expressions evaluate on
     # the interpreted path inside the aggregate, measured 4× slower
     # than the projected form at 50k docs (same finding as the LM
     # scoring avg — see operators/text.py bigram_lm_scores)
-    if hash_family == "fast":
-        hashed = shingled.select("id", F.xxhash64("shingle").alias("__h"))
-        hashed = hashed.select(
-            "id",
-            *[
-                F.xxhash64("__h", F.lit(i)).alias(f"__p{i}")
-                for i in range(num_hashes)
-            ],
-        )
-    else:
-        h = F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
-        hashed = shingled.select(
-            "id",
-            F.shiftrightunsigned(h, 30).alias("__hi"),
-            (h % F.lit(_SPLIT)).alias("__lo"),
-        )
-        hashed = hashed.select(
-            "id",
-            *[
+    h = F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
+    hashed = shingled.select(
+        "id",
+        F.shiftrightunsigned(h, 30).alias("__hi"),
+        (h % F.lit(_SPLIT)).alias("__lo"),
+    )
+    hashed = hashed.select(
+        "id",
+        *[
+            (
                 (
-                    (
-                        F.lit(a) * F.col("__hi")
-                        + F.lit(b) * F.col("__lo")
-                        + F.lit(c)
-                    )
-                    % F.lit(_MERSENNE31)
-                ).alias(f"__p{i}")
-                for i, (a, b, c) in enumerate(_perm_constants(num_hashes))
-            ],
-        )
+                    F.lit(a) * F.col("__hi")
+                    + F.lit(b) * F.col("__lo")
+                    + F.lit(c)
+                )
+                % F.lit(_MERSENNE31)
+            ).alias(f"__p{i}")
+            for i, (a, b, c) in enumerate(_perm_constants(num_hashes))
+        ],
+    )
     aggs = [
         F.min(f"__p{i}").alias(f"__m{i}") for i in range(num_hashes)
     ]
@@ -422,7 +406,6 @@ def minhash_clusters(
     num_bands: int = 16,
     threshold: float = 0.8,
     shingle_k: int = 5,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """(id, cluster_id) for EVERY input row: near-dup cluster labels —
     the LSH pairs at ``jaccard_est >= threshold`` form the edge set,
@@ -440,9 +423,7 @@ def minhash_clusters(
         connected_components,
     )
 
-    sigs = minhash_signature(
-        df, text_col, id_col, num_hashes, shingle_k, hash_family
-    )
+    sigs = minhash_signature(df, text_col, id_col, num_hashes, shingle_k)
     pairs = minhash_lsh_pairs(sigs, num_bands, threshold)
     # LSH pairs are distinct with left_id < right_id by construction —
     # skip CC's defensive dedup shuffle (r09, guide §2.4)

@@ -677,8 +677,11 @@ def split_by_cluster(
     output — ``persist()`` it if both dedup and this split consume it,
     so LSH+CC runs ONCE); ``clusters=None`` computes default
     ``minhash_clusters(df)`` labels over ``text_col`` as a
-    convenience."""
-    if clusters is None:
+    convenience; release their persists with
+    :func:`~ftm_columnstore_spark.operators.dedup.unpersist_intermediates`
+    on the returned frame."""
+    owned = clusters is None
+    if owned:
         from ftm_columnstore_spark.operators.dedup import minhash_clusters
 
         clusters = minhash_clusters(
@@ -694,9 +697,13 @@ def split_by_cluster(
         "__split_key",
         F.coalesce(F.col("__cluster").cast("string"), F.col(id_col).cast("string")),
     )
-    return split_by_hash(
+    out = split_by_hash(
         labeled, weights, id_col="__split_key", seed=seed
     ).drop("__cluster", "__split_key")
+    if owned:
+        # the caller never sees the internal clusters frame
+        out._cached_intermediates = clusters._cached_intermediates
+    return out
 
 
 def top_fraction_by_stratum(

@@ -1116,7 +1116,6 @@ def pq_encode(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     scale: int = 1_000_000,
-    method: str = "auto",
 ) -> DataFrame:
     """Corpus → PQ codes ``(id, codes array<int>)``: each vector is
     quantized to int64, split into ``m = len(codebooks)`` subvectors,
@@ -1126,22 +1125,18 @@ def pq_encode(
     whole point of PQ at 100 TB: a 64-dim float corpus compresses 32×
     and the serve scan reads only the code column.
 
-    ``method``: ``"expr"`` — one narrow map-only codegen scan, zero
-    shuffles; right for small codebooks. ``"join"`` — broadcast join
-    against the codebook relation + per-(id, s) min aggregation; right
-    for big codebooks (256 codes/subspace) where the literal argmin
-    expression makes Catalyst super-linear. ``"auto"`` picks by
-    ``n_codes``. Both produce byte-identical codes (same integer
+    The codebook size picks the path, as in training. Up to
+    ``_PQ_EXPR_MAX_CODES`` codes per subspace: one narrow map-only
+    codegen scan, zero shuffles. Bigger codebooks (256 codes/subspace),
+    where the literal argmin expression makes Catalyst super-linear:
+    broadcast join against the codebook relation + per-(id, s) min
+    aggregation. Both produce byte-identical codes (same integer
     arithmetic, same tiebreak) — tested against each other."""
     m = len(codebooks)
     dsub = len(codebooks[0][0][1])
     n_codes = len(codebooks[0])
     from ftm_columnstore_spark.functions.text import fan_out
 
-    if method == "auto":
-        method = "expr" if n_codes <= _PQ_EXPR_MAX_CODES else "join"
-    if method not in ("expr", "join"):
-        raise ValueError(f"unknown pq_encode method: {method!r}")
     # fan_out (r08): the per-row encode argmin is interpreted-HOF-heavy
     # and ran single-task on a single-split local input (measured 1.4s
     # at sf0.1); no-op on real multi-split scans, so the zero-shuffle
@@ -1149,7 +1144,7 @@ def pq_encode(
     q = fan_out(df).select(
         F.col(id_col).alias("id"), _quantize_col(vec_col, scale).alias("q")
     ).where(F.size("q") == dsub * m)
-    if method == "expr":
+    if n_codes <= _PQ_EXPR_MAX_CODES:
         return q.select("id", _pq_codes_col(codebooks).alias("codes"))
     assigned = _pq_assign_join(q, codebooks)
     return assigned.groupBy("id").agg(
@@ -1194,9 +1189,9 @@ def pq_topk(
     refine=100/500; scale ``refine`` with corpus size). m=16 doubles
     the code budget to 64 bits and lifts raw ADC to ~5/10. Books with
     >{_PQ_EXPR_MAX_CODES} codes/subspace automatically switch encode
-    and training to the broadcast-join path (:func:`pq_encode`
-    ``method="join"``) — the literal argmin expression is a measured
-    Catalyst cliff at 64 codes."""
+    and training to the broadcast-join path (:func:`pq_encode`) — the
+    literal argmin expression is a measured Catalyst cliff at 64
+    codes."""
     dim = len(query_vec)
     dsub = _check_pq_params(dim, m, n_codes)
     if refine is not None and refine < k:

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ftm_columnstore_spark import settings
 from ftm_columnstore_spark.model.ftm import SEARCHABLE_TYPES, schema_descendants
 from ftm_columnstore_spark.operators.assembly import assemble_entities
+from ftm_columnstore_spark.operators.graph import reverse_ids
 from ftm_columnstore_spark.plans.query import Aggregation, Criterion, Query
 
 
@@ -100,14 +101,7 @@ def compile_statements(statements: DataFrame, q: Query) -> DataFrame:
 
     # 3. reverse filter (F7): entities referencing a given id.
     for c in (c for c in q.criteria if c.field == "reverse"):
-        ids = (
-            statements.filter(
-                (F.col("prop_type") == "entity")
-                & (F.col("value") == str(c.value))
-            )
-            .select("canonical_id")
-            .distinct()
-        )
+        ids = reverse_ids(statements, str(c.value))
         df = df.join(ids, on="canonical_id", how="left_semi")
 
     # 4. search (F8): case-insensitive containment over searchable values.

@@ -2,8 +2,7 @@
 
 Mirrors the knobs of the reference (``ftm_columnstore/settings.py:1-15``),
 re-targeted at Spark: there is no DATABASE_URI — the store is a parquet
-directory — and the bulk-write batch size becomes the streaming micro-batch /
-file-size sizing hint.
+directory — and no bulk-write batch size: Spark sizes its own write tasks.
 """
 
 from __future__ import annotations
@@ -12,10 +11,6 @@ import os
 
 #: Root directory for managed statement stores (parquet).
 STORE_URI = os.environ.get("FTMCS_STORE_URI", "/tmp/ftm-columnstore-spark")
-
-#: Reference: BULK_WRITE_SIZE=100_000 (settings.py:15). Used to size
-#: streaming micro-batches and repartition-before-write.
-BULK_WRITE_SIZE = int(os.environ.get("FTMCS_BULK_WRITE_SIZE", "100000"))
 
 #: Reference: MAX_SQL_AGG_GROUPS (pyproject.toml:61, pinned to 11 in tests).
 #: Caps the number of groups returned by grouped aggregations.

@@ -64,6 +64,16 @@ def dedup_statements(df: DataFrame) -> DataFrame:
     )
 
 
+def in_datasets(df: DataFrame, dataset: str | list[str] | None) -> DataFrame:
+    """Rows of ``df`` in the dataset scope: one dataset name, a catalog
+    (list of names), or ``None`` for every dataset."""
+    if isinstance(dataset, str):
+        return df.filter(F.col("dataset") == dataset)
+    if dataset is not None:
+        return df.filter(F.col("dataset").isin(list(dataset)))
+    return df
+
+
 #: entries the per-store View answer cache keeps (LRU beyond that)
 ANSWER_CACHE_SIZE = 1024
 
@@ -394,10 +404,7 @@ class Store:
                 return self.spark.createDataFrame([], STATEMENT_SCHEMA)
             df = self.spark.read.schema(STATEMENT_SCHEMA).parquet(self._path)
             already_clean = self.is_compacted()
-        if isinstance(dataset, str):
-            df = df.filter(F.col("dataset") == dataset)
-        elif dataset is not None:
-            df = df.filter(F.col("dataset").isin(list(dataset)))
+        df = in_datasets(df, dataset)
         if as_of is not None:
             df = df.filter(
                 F.col("last_seen") <= F.to_timestamp(F.lit(as_of))

@@ -40,10 +40,9 @@ from collections.abc import Callable, Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ftm_columnstore_spark.plans.query import Query
-from ftm_columnstore_spark.store import Store
+from ftm_columnstore_spark.store import Store, in_datasets
 
 
 #: largest ``entities(q)`` limit whose answer is collected and cached;
@@ -146,11 +145,7 @@ class View:
         idx = self.store.value_index()
         if idx is None:
             return self._statements()
-        if isinstance(self.dataset, str):
-            return idx.filter(F.col("dataset") == self.dataset)
-        if self.dataset is not None:
-            return idx.filter(F.col("dataset").isin(list(self.dataset)))
-        return idx
+        return in_datasets(idx, self.dataset)
 
     def get_inverted(self, entity_id: str) -> Iterator[tuple[str, str]]:
         from ftm_columnstore_spark.operators.graph import inverted
@@ -219,7 +214,3 @@ class View:
             .orderBy("column")
             .collect()
         ]
-
-
-def view_for(store: Store, dataset: str | None = None) -> View:
-    return View(store, dataset)

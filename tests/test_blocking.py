@@ -3,6 +3,7 @@ connected components (SURVEY §2.10 D1-D5)."""
 
 import pytest
 
+from ftm_columnstore_spark.operators import blocking
 from ftm_columnstore_spark.operators.blocking import (
     blocking_candidates,
     candidate_pairs,
@@ -101,22 +102,25 @@ def test_connected_components_chain(spark):
     assert set(cmap.values()) == {"n0"}
 
 
-def test_connected_components_star_long_chain(spark):
-    # 200-node chain: diameter 199. Label propagation needs ~200 rounds;
-    # large-star/small-star must collapse it within its default budget.
+def test_connected_components_star_long_chain(spark, monkeypatch):
+    # 200-node chain: diameter 199. Min-label propagation would need ~200
+    # rounds; large-star/small-star must collapse it within MAX_CC_ROUNDS.
+    # SMALL_GRAPH_EDGES=0 forces the distributed rounds (199 edges would
+    # otherwise take the union-find path).
+    monkeypatch.setattr(blocking, "SMALL_GRAPH_EDGES", 0)
     edges = spark.createDataFrame(
         [(f"n{i:04d}", f"n{i+1:04d}") for i in range(199)],
         ["left_id", "right_id"],
     )
     cmap = {
         r["entity_id"]: r["canonical_id"]
-        for r in connected_components(edges, algorithm="star").collect()
+        for r in connected_components(edges).collect()
     }
     assert len(cmap) == 200
     assert set(cmap.values()) == {"n0000"}
 
 
-def test_connected_components_algorithms_agree(spark):
+def test_connected_components_algorithms_agree(spark, monkeypatch):
     import random
 
     rng = random.Random(7)
@@ -142,20 +146,18 @@ def test_connected_components_algorithms_agree(spark):
     seen = {n for ab in edges_py for n in ab}
     expected = {n: find(n) for n in seen}
     # find() roots are component-minimum ids because unions keep the min.
-    # threshold=0 forces the DISTRIBUTED paths; the default exercises the
-    # small-graph union-find fast path — all three must agree.
-    for algo in ("star", "label"):
-        for thr in (0, 100_000):
-            cmap = {
-                r["entity_id"]: r["canonical_id"]
-                for r in connected_components(
-                    edges, algorithm=algo, small_graph_threshold=thr
-                ).collect()
-            }
-            assert cmap == expected, (algo, thr)
+    # SMALL_GRAPH_EDGES=0 forces the DISTRIBUTED star rounds; the default
+    # exercises the small-graph union-find fast path — both must agree.
+    for thr in (0, 100_000):
+        monkeypatch.setattr(blocking, "SMALL_GRAPH_EDGES", thr)
+        cmap = {
+            r["entity_id"]: r["canonical_id"]
+            for r in connected_components(edges).collect()
+        }
+        assert cmap == expected, thr
 
 
-def test_connected_components_edges_deduped_flag(spark):
+def test_connected_components_edges_deduped_flag(spark, monkeypatch):
     """r09: edges_deduped=True (callers whose pair relations are
     distinct + self-loop-free by construction) skips the defensive
     dedup shuffle but must yield identical labels on both the
@@ -167,10 +169,11 @@ def test_connected_components_edges_deduped_flag(spark):
         for r in connected_components(edges).collect()
     }
     for thr in (0, 100_000):
+        monkeypatch.setattr(blocking, "SMALL_GRAPH_EDGES", thr)
         cmap = {
             r["entity_id"]: r["canonical_id"]
             for r in connected_components(
-                edges, small_graph_threshold=thr, edges_deduped=True
+                edges, edges_deduped=True
             ).collect()
         }
         assert cmap == expected, thr
@@ -194,7 +197,7 @@ from hypothesis import strategies as st
         max_size=40,
     )
 )
-def test_connected_components_property(spark, edges_py):
+def test_connected_components_property(spark, monkeypatch, edges_py):
     """Star CC equals a union-find oracle on arbitrary edge lists."""
     parent = {}
 
@@ -212,14 +215,13 @@ def test_connected_components_property(spark, edges_py):
     expected = {n: find(n) for ab in edges_py for n in ab}
 
     edges = spark.createDataFrame(edges_py, ["left_id", "right_id"])
-    # threshold=0 pins the DISTRIBUTED star rounds against the oracle
-    # (the default fast path IS a union-find — testing it against one
-    # would be circular; the agree test covers path equivalence)
+    # SMALL_GRAPH_EDGES=0 pins the DISTRIBUTED star rounds against the
+    # oracle (the default fast path IS a union-find — testing it against
+    # one would be circular; the agree test covers path equivalence)
+    monkeypatch.setattr(blocking, "SMALL_GRAPH_EDGES", 0)
     cmap = {
         r["entity_id"]: r["canonical_id"]
-        for r in connected_components(
-            edges, algorithm="star", small_graph_threshold=0
-        ).collect()
+        for r in connected_components(edges).collect()
     }
     assert cmap == expected
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from ftm_columnstore_spark.operators import bpe
 from ftm_columnstore_spark.operators.bpe import (
     apply_bpe,
     bpe_token_counts,
@@ -155,17 +156,18 @@ def _ref_bpe(words: list[str], n_merges: int):
     ),
     n_merges=st.integers(1, 5),
 )
-def test_bpe_matches_reference(spark, words, n_merges):
+def test_bpe_matches_reference(spark, monkeypatch, words, n_merges):
     """Engine merges AND post-merge token counts equal the classic
     in-memory BPE on arbitrary corpora — pins both the argmax
     tie-break and the greedy left-to-right application the
     string-replace encoding claims to implement."""
     ref_merges, ref_tokens = _ref_bpe(words, n_merges)
     df = spark.createDataFrame([(1, " ".join(words))], ["doc_id", "text"])
-    # threshold=0 forces the DISTRIBUTED rounds — the default fast path
-    # IS the reference algorithm, so testing it here would be circular;
-    # test_fast_path_matches_distributed covers path equivalence
-    m = learn_bpe(df, n_merges=n_merges, small_vocab_threshold=0)
+    # SMALL_VOCAB_WORDS=0 forces the DISTRIBUTED rounds — the default
+    # fast path IS the reference algorithm, so testing it here would be
+    # circular; test_fast_path_matches_distributed covers path equivalence
+    monkeypatch.setattr(bpe, "SMALL_VOCAB_WORDS", 0)
+    m = learn_bpe(df, n_merges=n_merges)
     got_merges = [
         (r["left_sym"], r["right_sym"], r["pair_count"])
         for r in m.orderBy("rank").collect()
@@ -177,7 +179,7 @@ def test_bpe_matches_reference(spark, words, n_merges):
     assert got_tokens == ref_tokens
 
 
-def test_fast_path_matches_distributed(spark):
+def test_fast_path_matches_distributed(spark, monkeypatch):
     """The small-vocab driver fast path and the distributed rounds
     produce identical merge tables (including early stop)."""
     texts = [
@@ -186,7 +188,8 @@ def test_fast_path_matches_distributed(spark):
     ]
     df = spark.createDataFrame(texts, ["doc_id", "text"])
     fast = learn_bpe(df, n_merges=10).collect()
-    dist = learn_bpe(df, n_merges=10, small_vocab_threshold=0).collect()
+    monkeypatch.setattr(bpe, "SMALL_VOCAB_WORDS", 0)
+    dist = learn_bpe(df, n_merges=10).collect()
     assert [tuple(r) for r in fast] == [tuple(r) for r in dist]
     assert len(fast) == 10
 
@@ -269,7 +272,7 @@ def test_bpe_tokens_col_streams(spark, tmp_path):
     assert got == expected and got["low"] >= 2
 
 
-def test_vocab_cap_equals_full_when_vocab_fits(spark):
+def test_vocab_cap_equals_full_when_vocab_fits(spark, monkeypatch):
     """When the true vocabulary fits the cap, the capped training is
     exactly the uncapped one — on BOTH the driver fast path and the
     distributed rounds (the cap cuts the relation before either)."""
@@ -281,9 +284,8 @@ def test_vocab_cap_equals_full_when_vocab_fits(spark):
     full = learn_bpe(df, n_merges=8).collect()
     capped = learn_bpe(df, n_merges=8, vocab_cap=100).collect()
     assert [tuple(r) for r in capped] == [tuple(r) for r in full]
-    capped_dist = learn_bpe(
-        df, n_merges=8, vocab_cap=100, small_vocab_threshold=0
-    ).collect()
+    monkeypatch.setattr(bpe, "SMALL_VOCAB_WORDS", 0)
+    capped_dist = learn_bpe(df, n_merges=8, vocab_cap=100).collect()
     assert [tuple(r) for r in capped_dist] == [tuple(r) for r in full]
 
 

@@ -510,6 +510,30 @@ def test_split_by_cluster_auto_clusters(spark):
     assert len({got[i] for i in range(6)}) == 1
 
 
+def test_split_by_cluster_auto_clusters_releases_persists(spark):
+    """clusters=None persists minhash_clusters' relations; they must be
+    released through the returned frame. Persisted-RDD ids are compared
+    as sets: Spark holds them weakly, so an older test's leftovers may
+    vanish mid-test and a bare count would drift."""
+    from ftm_columnstore_spark.operators.dedup import unpersist_intermediates
+    from ftm_columnstore_spark.operators.sampling import split_by_cluster
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    text = "split by cluster persist leak probe, a near-duplicate body"
+    docs = spark.createDataFrame(
+        [(1, text), (2, text), (3, "an unrelated split leak probe document")],
+        ["doc_id", "text"],
+    )
+    before = persisted()
+    out = split_by_cluster(docs, None, {"train": 0.5, "test": 0.5})
+    assert len(out.collect()) == 3
+    assert persisted() - before
+    unpersist_intermediates(out, blocking=True)
+    assert not persisted() - before
+
+
 def test_mixture_by_temperature_alpha_smooths(spark):
     """alpha=0.5 keeps a HIGHER fraction of the small source than of the
     big one (temperature smoothing), and the result is deterministic."""

@@ -579,9 +579,10 @@ def test_pq_trained_improves_adc_recall(vectors):
     assert len(r_trained & exact) >= 3
 
 
-def test_pq_encode_join_matches_expr(vectors):
+def test_pq_encode_join_matches_expr(vectors, monkeypatch):
     """The broadcast-join encode (scale path for 256-code books) must
     produce byte-identical codes to the codegen expression path."""
+    from ftm_columnstore_spark.operators import similarity
     from ftm_columnstore_spark.operators.similarity import (
         pq_codebooks_fixed,
         pq_encode,
@@ -590,15 +591,15 @@ def test_pq_encode_join_matches_expr(vectors):
     cbs = pq_codebooks_fixed(vectors, dim=16, m=4, n_codes=16)
     a = {
         r["id"]: list(r["codes"])
-        for r in pq_encode(vectors, cbs, method="expr").collect()
+        for r in pq_encode(vectors, cbs).collect()
     }
+    # a 0-code expression cap sends the 16-code book down the join path
+    monkeypatch.setattr(similarity, "_PQ_EXPR_MAX_CODES", 0)
     b = {
         r["id"]: list(r["codes"])
-        for r in pq_encode(vectors, cbs, method="join").collect()
+        for r in pq_encode(vectors, cbs).collect()
     }
     assert a == b
-    with pytest.raises(ValueError, match="method"):
-        pq_encode(vectors, cbs, method="nope")
 
 
 def test_pq_trained_join_path_matches_replay(vectors):

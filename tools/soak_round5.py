@@ -14,6 +14,7 @@ import json
 import os
 import sys
 import time
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -60,6 +61,7 @@ def timed(label, fn):
 
 def main():
     from ftm_columnstore_spark.functions.text import word_tokens_col
+    from ftm_columnstore_spark.operators import bpe
     from ftm_columnstore_spark.operators.bpe import learn_bpe
     from ftm_columnstore_spark.operators.sketches import cms_heavy_hitters
     from ftm_columnstore_spark.session import get_spark
@@ -76,21 +78,17 @@ def main():
         # capped vs uncapped training (distributed rounds forced so the
         # cap's per-round bound is what's exercised, not the driver
         # fast path)
-        timed(
-            f"learn_bpe(12, uncapped, dist) x{factor}",
-            lambda: learn_bpe(
-                docs, n_merges=12, small_vocab_threshold=0
-            ).count(),
-        )
-        timed(
-            f"learn_bpe(12, cap=32k, dist) x{factor}",
-            lambda: learn_bpe(
-                docs,
-                n_merges=12,
-                small_vocab_threshold=0,
-                vocab_cap=32_768,
-            ).count(),
-        )
+        with mock.patch.object(bpe, "SMALL_VOCAB_WORDS", 0):
+            timed(
+                f"learn_bpe(12, uncapped, dist) x{factor}",
+                lambda: learn_bpe(docs, n_merges=12).count(),
+            )
+            timed(
+                f"learn_bpe(12, cap=32k, dist) x{factor}",
+                lambda: learn_bpe(
+                    docs, n_merges=12, vocab_cap=32_768
+                ).count(),
+            )
         # one-scan weighted CMS heavy hitters over corpus tokens (a23
         # shape)
         toks = docs.where(F.col("text").isNotNull()).select(
